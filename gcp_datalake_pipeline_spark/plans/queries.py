@@ -18,22 +18,75 @@ Scale notes are per-query docstrings: each plan states why it holds at
 
 from __future__ import annotations
 
+import os
+import stat
+import threading
 from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+# The session confs that change how Spark maps parquet types to Spark
+# types: a schema inferred under one setting is wrong under another.
+_TYPE_MAPPING_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+_SCHEMAS_MAX = 256
+_SCHEMAS: dict[tuple, StructType] = {}
+_SCHEMAS_LOCK = threading.Lock()
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers a file's schema once per
+    file version. Inference is a Spark job (a footer read on an
+    executor); a read with the schema supplied only lists the file on
+    the driver. Directories and missing paths are inferred every time."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        st = None
+    if st is None or not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    key = (
+        os.path.abspath(path), st.st_ino, st.st_size, st.st_mtime_ns,
+        *(spark.conf.get(c) for c in _TYPE_MAPPING_CONFS),
+    )
+    with _SCHEMAS_LOCK:
+        schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    with _SCHEMAS_LOCK:
+        if len(_SCHEMAS) >= _SCHEMAS_MAX:
+            del _SCHEMAS[next(iter(_SCHEMAS))]  # oldest first
+        _SCHEMAS[key] = df.schema
+    return df
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read a testdata table.
 
+    The parquet schema of each table file is memoised on the driver, so
+    only the first read of a file version runs Spark's schema-inference
+    job; later reads supply the schema Spark inferred then and start no
+    job. The key is the file's identity ``(abspath, st_ino, st_size,
+    st_mtime_ns)`` plus the session confs that change the parquet->Spark
+    type mapping, so a rewritten file or a changed conf is inferred
+    again. Only the ``StructType`` is kept (at most 256 entries), never
+    data or a DataFrame.
+
     ``events.ts`` is parquet TIMESTAMP(NANOS), which Spark's vectorized
     reader rejects; we read it as a raw nanosecond long (legacy conf) and
     expose both ``ts`` (microsecond timestamp, for calendar ops) and
     ``ts_ns`` (exact nanos, for order/gap arithmetic that must match a
-    nanosecond-precision oracle bit-for-bit).
+    nanosecond-precision oracle bit-for-bit). The legacy conf is set for
+    every table, so a table's types never depend on whether ``events``
+    was read earlier in the session.
 
     Handles both testdata vintages: TIMESTAMP(NANOS) (read as a raw
     nanosecond long via the legacy conf) and TIMESTAMP(MICROS) (read
@@ -41,9 +94,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     timezone is UTC (session.py), so the NTZ->LTZ cast is wall-clock
     preserving and matches DuckDB's naive reading of the same parquet.
     """
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
         ts_type = dict(df.dtypes)["ts"]
         if ts_type == "bigint":  # TIMESTAMP(NANOS) file under legacy conf
             return df.withColumn("ts_ns", F.col("ts")).withColumn(
@@ -61,7 +114,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # than no spread on all of them at sf0.1 — while the dense consumers
     # (shingling, signatures) now spread themselves at their own entry
     # points (dedup.doc_shingles, text.tokens, the HOF embedding paths).
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return _read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 @dataclass

@@ -2,9 +2,13 @@
 
 Runs named registry queries against $SPARK_GRAFT_SF_DIR with the noop
 sink (guide §1.4), labelled via setJobDescription (guide §1.5), and
-reports per-run wall seconds plus the job/stage/task counts the run
-scheduled (from the status tracker) so shuffle-heavy shapes are visible
-without the UI. Optionally dumps .explain("formatted") to a file.
+reports per run the build seconds (the builder call, including any
+Spark jobs it runs eagerly) and execute seconds (the noop write), the
+jobs each layer started, and the stage/task counts the run scheduled
+(from the status tracker), so both the hidden build layer and
+shuffle-heavy shapes are visible without the UI. Jobs are counted by
+job-id delta, which no retention limit truncates. Optionally dumps
+.explain("formatted") to a file.
 
 Usage:
   python scripts/profile_query.py q1_pricing_summary dedup_minhash_lsh \
@@ -39,6 +43,7 @@ def main() -> None:
     sc = spark.sparkContext
     spark.range(1000).selectExpr("sum(id)").collect()  # JVM warmup
     tracker = sc.statusTracker()
+    dag = sc._jsc.sc().dagScheduler()
 
     out: dict[str, dict] = {}
     for name in args.names:
@@ -56,34 +61,38 @@ def main() -> None:
             )
             with open(path, "w") as f:
                 f.write(plan)
-        times = []
-        jobs0 = tracker.getJobIdsForGroup(None)
+        build, execute, build_jobs, exec_jobs = [], [], [], []
+        n_stages = n_tasks = 0
         for i in range(args.runs):
             sc.setJobDescription(f"profile:{name}#{i}")
-            t0 = time.perf_counter()
-            QUERIES[name].fn(spark, args.sf_dir).write.mode(
-                "overwrite"
-            ).format("noop").save()
-            times.append(round(time.perf_counter() - t0, 3))
+            j0, t0 = dag.nextJobId(), time.perf_counter()
+            df = QUERIES[name].fn(spark, args.sf_dir)
+            j1, t1 = dag.nextJobId(), time.perf_counter()
+            df.write.mode("overwrite").format("noop").save()
+            j2, t2 = dag.nextJobId(), time.perf_counter()
+            build.append(round(t1 - t0, 3))
+            execute.append(round(t2 - t1, 3))
+            build_jobs.append(j1 - j0)
+            exec_jobs.append(j2 - j1)
+            for j in range(j0, j2):
+                ji = tracker.getJobInfo(j)
+                if ji is None:
+                    continue
+                for s in ji.stageIds:
+                    si = tracker.getStageInfo(s)
+                    if si is not None:
+                        n_stages += 1
+                        n_tasks += si.numTasks
         sc.setJobDescription(None)
-        # job/stage/task counts for the measured runs (all runs pooled)
-        jobs1 = tracker.getJobIdsForGroup(None)
-        new_jobs = [j for j in jobs1 if j not in set(jobs0)]
-        n_stages = n_tasks = 0
-        for j in new_jobs:
-            ji = tracker.getJobInfo(j)
-            if ji is None:
-                continue
-            for s in ji.stageIds:
-                si = tracker.getStageInfo(s)
-                if si is not None:
-                    n_stages += 1
-                    n_tasks += si.numTasks
+        times = [round(b + e, 3) for b, e in zip(build, execute)]
         runs = args.runs
         out[name] = {
             "times": times,
             "best": min(times),
-            "jobs/run": round(len(new_jobs) / runs, 1),
+            "build_s": build,
+            "exec_s": execute,
+            "build_jobs": build_jobs,
+            "exec_jobs": exec_jobs,
             "stages/run": round(n_stages / runs, 1),
             "tasks/run": round(n_tasks / runs, 1),
         }

@@ -2,6 +2,8 @@
 must survive refactors. These assert on executedPlan strings — cheap, no
 data materialized (explain only)."""
 
+import os
+
 import pytest
 
 from gcp_datalake_pipeline_spark.plans import QUERIES
@@ -257,3 +259,120 @@ def test_text_stats_langid_zero_shuffle(spark, name):
     assert "rangepartitioning" not in plan
     assert "Window" not in plan
     assert "Join" not in plan
+
+
+# --------------------------------------------------------------------------
+# Build layer: load_table resolves each file's schema once per file
+# version, so a warm query build starts no Spark job.
+# --------------------------------------------------------------------------
+
+TABLES = sorted(
+    f.removesuffix(".parquet") for f in os.listdir(SF_DIR) if f.endswith(".parquet")
+)
+TPCH_HEADLINE = [
+    "q1_pricing_summary", "q3_shipping_priority",
+    "q4_priority_with_late_items", "q5_local_supplier_volume",
+    "q10_top_returning_customers", "q14_red_part_revenue_share",
+    "q18_large_volume_customers", "q19_disjunctive_revenue",
+]
+
+
+def _jobs_started(spark, fn):
+    """(fn's result, Spark jobs fn started), by job-id delta."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = dag.nextJobId()
+    out = fn()
+    return out, dag.nextJobId() - j0
+
+
+def test_load_table_second_read_starts_no_job(spark):
+    from gcp_datalake_pipeline_spark.plans.queries import load_table
+
+    first = load_table(spark, SF_DIR, "lineitem")
+    again, jobs = _jobs_started(
+        spark, lambda: load_table(spark, SF_DIR, "lineitem")
+    )
+    assert jobs == 0
+    assert again.schema == first.schema
+
+
+def test_load_table_rewritten_file_is_inferred_again(spark, tmp_path):
+    """A file rewritten at the same path with other columns is a new file
+    version: its new schema is returned, never the memoised one."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from gcp_datalake_pipeline_spark.plans.queries import load_table
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    assert load_table(spark, str(tmp_path), "t").columns == ["a"]
+    assert load_table(spark, str(tmp_path), "t").columns == ["a"]
+    pq.write_table(pa.table({"b": ["x"], "c": [1.5]}), path)
+    df = load_table(spark, str(tmp_path), "t")
+    assert df.dtypes == [("b", "string"), ("c", "double")]
+    assert [tuple(r) for r in df.collect()] == [("x", 1.5)]
+
+
+def test_load_table_memoised_dtypes_match_fresh_inference(spark, monkeypatch):
+    from gcp_datalake_pipeline_spark.plans import queries
+
+    memoised = {}
+    for name in TABLES:
+        queries.load_table(spark, SF_DIR, name)
+        df, jobs = _jobs_started(
+            spark, lambda: queries.load_table(spark, SF_DIR, name)
+        )
+        assert jobs == 0, name
+        memoised[name] = df.dtypes
+    monkeypatch.setattr(queries, "_SCHEMAS", {})
+    for name in TABLES:
+        fresh, jobs = _jobs_started(
+            spark, lambda: queries.load_table(spark, SF_DIR, name)
+        )
+        assert jobs >= 1, name  # really inferred again
+        assert fresh.dtypes == memoised[name], name
+
+
+def test_load_table_timestamp_nanos_vintage(spark, tmp_path):
+    """events.parquet written as TIMESTAMP(NANOS): the memoised second read
+    keeps the exact nanosecond ``ts_ns`` and the same types."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from gcp_datalake_pipeline_spark.plans.queries import load_table
+
+    nanos = [1_700_000_000_123_456_789, 1_700_000_060_000_000_001]
+    pq.write_table(
+        pa.table({
+            "user_id": pa.array([1, 2], pa.int64()),
+            "ts": pa.array(nanos, pa.timestamp("ns")),
+        }),
+        str(tmp_path / "events.parquet"),
+    )
+    assert (
+        pq.read_schema(str(tmp_path / "events.parquet")).field("ts").type
+        == pa.timestamp("ns")
+    )
+
+    def ts_ns(df):
+        return [r.ts_ns for r in df.orderBy("user_id").collect()]
+
+    first = load_table(spark, str(tmp_path), "events")
+    again, jobs = _jobs_started(
+        spark, lambda: load_table(spark, str(tmp_path), "events")
+    )
+    assert jobs == 0
+    assert again.dtypes == first.dtypes
+    assert dict(first.dtypes)["ts"] == "timestamp"
+    assert dict(first.dtypes)["ts_ns"] == "bigint"
+    assert ts_ns(again) == ts_ns(first) == nanos
+
+
+@pytest.mark.parametrize("name", TPCH_HEADLINE)
+def test_warm_tpch_build_starts_no_job(spark, name):
+    """The build layer of a warm TPC-H headline query is Spark-job free:
+    its only eager work was parquet schema inference."""
+    QUERIES[name].fn(spark, SF_DIR)
+    _, jobs = _jobs_started(spark, lambda: QUERIES[name].fn(spark, SF_DIR))
+    assert jobs == 0
