@@ -1,6 +1,9 @@
 """Persisted IVF index: value parity with the recompute path, frozen-
 centroid incremental extension, and the partition-pruned probe scan."""
 
+import shutil
+
+import pytest
 from pyspark.sql import functions as F
 
 from gcp_datalake_pipeline_spark.operators import ann_index, similarity
@@ -10,6 +13,43 @@ EMB = "/root/testdata/sf0.001/embeddings.parquet"
 QIDS = [3, 57, 111]
 
 
+@pytest.fixture(scope="module")
+def _full_builds(spark, tmp_path_factory):
+    """``pq_m -> (root, centroids)``: one ``build_ivf_index`` over the
+    whole corpus per index kind, built on first use and shared by the
+    module's tests through ``built_index``."""
+    builds = {}
+
+    def get(pq_m):
+        if pq_m not in builds:
+            root = str(tmp_path_factory.mktemp("ann_full") / "lake")
+            cat = TransactionalCatalog(spark=spark, root=root)
+            emb = spark.read.parquet(EMB)
+            builds[pq_m] = (
+                root, ann_index.build_ivf_index(cat, emb, pq_m=pq_m)
+            )
+        return builds[pq_m]
+
+    return get
+
+
+@pytest.fixture()
+def built_index(spark, _full_builds, tmp_path):
+    """``built_index(pq_m=None) -> (catalog, centroids)``: a fresh
+    transactional catalog in the state ``build_ivf_index(catalog, emb,
+    pq_m=pq_m)`` leaves an empty one in, and the centroids it returned.
+    The catalog is a copy of the shared build; its manifest holds only
+    paths relative to the root, so the copy is the same catalog."""
+
+    def make(pq_m=None):
+        root, cents = _full_builds(pq_m)
+        lake = str(tmp_path / "lake")
+        shutil.copytree(root, lake)
+        return TransactionalCatalog(spark=spark, root=lake), cents
+
+    return make
+
+
 def _rows(df):
     return {
         (r["query_id"], r["neighbor_id"], r["cosine_sim"], r["rank"])
@@ -17,13 +57,12 @@ def _rows(df):
     }
 
 
-def test_index_query_matches_recompute_path(spark, tmp_path):
+def test_index_query_matches_recompute_path(spark, built_index):
     """ivf_index_topk over the persisted index == ivf_topk given the same
     centroids — the persisted path changes WHERE assignment lives, never
     the values (which is why it shares the kmeans gate's oracle)."""
     emb = spark.read.parquet(EMB)
-    cat = TransactionalCatalog(spark=spark, root=str(tmp_path / "lake"))
-    cents = ann_index.build_ivf_index(cat, emb)
+    cat, cents = built_index()
     got = _rows(ann_index.ivf_index_topk(cat, QIDS, k=5))
     want = _rows(
         similarity.ivf_topk(emb, QIDS, k=5, centroids=cents)
@@ -31,12 +70,10 @@ def test_index_query_matches_recompute_path(spark, tmp_path):
     assert got == want and got
 
 
-def test_probe_scan_is_partition_pruned(spark, tmp_path):
+def test_probe_scan_is_partition_pruned(built_index):
     """The candidate scan must carry PartitionFilters on cid (probed
     cells only) — the on-disk nprobe/nlist contract."""
-    emb = spark.read.parquet(EMB)
-    cat = TransactionalCatalog(spark=spark, root=str(tmp_path / "lake"))
-    ann_index.build_ivf_index(cat, emb)
+    cat, _ = built_index()
     out = ann_index.ivf_index_topk(cat, QIDS, k=5, nprobe=4)
     plan = out._jdf.queryExecution().executedPlan().toString()
     scans = [l for l in plan.splitlines() if "FileScan parquet" in l]
@@ -82,7 +119,7 @@ def test_registry_query_matches_kmeans_gate(spark):
     assert got == want and got
 
 
-def test_external_query_vectors(spark, tmp_path):
+def test_external_query_vectors(spark, built_index):
     """Serving shape: external (query_id, vector) pairs probe the index
     without touching any corpus data outside the probed cells. A query
     vector equal to a stored vector must rank that vector first with
@@ -90,8 +127,7 @@ def test_external_query_vectors(spark, tmp_path):
     import pytest
 
     emb = spark.read.parquet(EMB)
-    cat = TransactionalCatalog(spark=spark, root=str(tmp_path / "lake"))
-    ann_index.build_ivf_index(cat, emb)
+    cat, _ = built_index()
     stored = {r["vec_id"]: list(r["embedding"]) for r in emb.limit(50).collect()}
     qv = [(9001, stored[3]), (9002, stored[17])]
     out = ann_index.ivf_index_topk(cat, query_vectors=qv, k=3)
@@ -106,14 +142,12 @@ def test_external_query_vectors(spark, tmp_path):
         ann_index.ivf_index_topk(cat)
 
 
-def test_self_query_vector_fetch_is_partition_pruned(spark, tmp_path):
+def test_self_query_vector_fetch_is_partition_pruned(built_index):
     """Round-7 contract: self-query vectors come through the bucketed vid
     map (PartitionFilters on _kb) and the queries' own cells
     (PartitionFilters on cid) — never a vid-IN scan over every cid
     partition's footers."""
-    emb = spark.read.parquet(EMB)
-    cat = TransactionalCatalog(spark=spark, root=str(tmp_path / "lake"))
-    ann_index.build_ivf_index(cat, emb)
+    cat, _ = built_index()
 
     map_df = ann_index._query_cid_map(cat, "ann_ivf", QIDS)
     map_plan = map_df._jdf.queryExecution().executedPlan().toString()
@@ -128,7 +162,7 @@ def test_self_query_vector_fetch_is_partition_pruned(spark, tmp_path):
     assert got == set(QIDS)
 
 
-def test_legacy_index_without_map_falls_back(spark, tmp_path):
+def test_legacy_index_without_map_falls_back(spark, built_index):
     """An index persisted before the vid map existed must still answer
     self-queries (pushed-down vid filter over the cells) with identical
     values."""
@@ -136,8 +170,7 @@ def test_legacy_index_without_map_falls_back(spark, tmp_path):
     import os
 
     emb = spark.read.parquet(EMB)
-    cat = TransactionalCatalog(spark=spark, root=str(tmp_path / "lake"))
-    cents = ann_index.build_ivf_index(cat, emb)
+    cat, cents = built_index()
     want = _rows(ann_index.ivf_index_topk(cat, QIDS, k=5))
     # simulate a pre-round-7 index: surgically drop the map table
     mpath = os.path.join(cat.root, "_MANIFEST.json")
@@ -267,15 +300,14 @@ def test_stream_extend_missing_index_never_quarantines(spark, tmp_path):
     assert len(rounds) == 1 and rounds[0]["n_vectors"] == 50
 
 
-def test_df_input_serving_matches_list_path(spark, tmp_path):
+def test_df_input_serving_matches_list_path(spark, built_index):
     """VERDICT r7 #4: ivf_index_topk_df (bulk DataFrame-input serving)
     must be value-identical to the driver-list path, with NO driver-side
     collect of query vectors — centroid ranking runs as an Arrow
     pandas_udf over the query DataFrame against the broadcast centroid
     matrix, and the cells scan stays partition-pruned."""
     emb = spark.read.parquet(EMB)
-    cat = TransactionalCatalog(spark=spark, root=str(tmp_path / "lake"))
-    ann_index.build_ivf_index(cat, emb)
+    cat, _ = built_index()
 
     # external-query parity: same vectors through both input shapes
     qvecs = [
@@ -312,7 +344,7 @@ def test_df_input_serving_matches_list_path(spark, tmp_path):
     assert _rows(got_nop) == want
 
 
-def test_remove_ids_absent_from_all_query_paths(spark, tmp_path):
+def test_remove_ids_absent_from_all_query_paths(spark, built_index):
     """VERDICT r8 #1(a): after remove_ids, a removed id appears in NO
     query path — ivf_index_topk (self-query + candidate), the bulk
     ivf_index_topk_df twin, and the self-query vector fetch — while the
@@ -320,8 +352,7 @@ def test_remove_ids_absent_from_all_query_paths(spark, tmp_path):
     removed vectors under the same frozen centroids (the delete is an
     anti-join, never a rescore)."""
     emb = spark.read.parquet(EMB)
-    cat = TransactionalCatalog(spark=spark, root=str(tmp_path / "lake"))
-    cents = ann_index.build_ivf_index(cat, emb)
+    cat, cents = built_index()
 
     # victims: a served neighbor (so the absence assert has teeth) and a
     # query id (so the self-query exclusion is exercised too)
@@ -373,7 +404,7 @@ def test_remove_ids_absent_from_all_query_paths(spark, tmp_path):
     assert ext and victim not in {r[1] for r in ext}
 
 
-def test_compact_index_drops_rows_preserves_layouts(spark, tmp_path):
+def test_compact_index_drops_rows_preserves_layouts(spark, built_index):
     """VERDICT r8 #1(b): compact_index physically drops the tombstoned
     rows from the cells AND the vid map, preserves the cid partitioning,
     the map's _kb layout + bucket-meta sidecar (both plan contracts
@@ -383,8 +414,7 @@ def test_compact_index_drops_rows_preserves_layouts(spark, tmp_path):
 
     emb = spark.read.parquet(EMB)
     n_total = emb.count()
-    cat = TransactionalCatalog(spark=spark, root=str(tmp_path / "lake"))
-    cents = ann_index.build_ivf_index(cat, emb)
+    cat, cents = built_index()
     removed = [7, 42]
     ann_index.remove_ids(cat, removed)
 
@@ -422,14 +452,13 @@ def test_compact_index_drops_rows_preserves_layouts(spark, tmp_path):
     assert _rows(out) == want and want
 
 
-def test_tombstone_shadows_reextended_id_until_compaction(spark, tmp_path):
+def test_tombstone_shadows_reextended_id_until_compaction(spark, built_index):
     """VERDICT r8 #1(c): the documented id-reuse caveat — a tombstone
     shadows ALL rows of its vid, including ones appended AFTER the
     removal, until compact_index folds it; after compaction a
     re-extended id serves normally with its new vector."""
     emb = spark.read.parquet(EMB)
-    cat = TransactionalCatalog(spark=spark, root=str(tmp_path / "lake"))
-    ann_index.build_ivf_index(cat, emb)
+    cat, _ = built_index()
     x = 3
     new_vec = [
         -float(v) for v in emb.filter(F.col("vec_id") == x).first()["embedding"]
@@ -474,14 +503,13 @@ def _adc_rows(df):
     }
 
 
-def test_pq_index_full_probe_equals_pq_topk(spark, tmp_path):
+def test_pq_index_full_probe_equals_pq_topk(spark, built_index):
     """With nprobe == nlist the coarse pruning is a no-op, so ADC serving
     over the PERSISTED codes must equal the recompute pq_topk exactly
     (same first-16 codebook contract, same integer micro-unit sums) —
     on BOTH the driver-list and the bulk DataFrame paths."""
     emb = spark.read.parquet(EMB)
-    cat = TransactionalCatalog(spark=spark, root=str(tmp_path / "lake"))
-    ann_index.build_ivf_index(cat, emb, pq_m=8)
+    cat, _ = built_index(pq_m=8)
     want = _adc_rows(similarity.pq_topk(emb, QIDS, k=5, m=8))
     got = _adc_rows(ann_index.ivf_index_pq_topk(cat, QIDS, k=5, nprobe=16))
     assert got == want and got
@@ -495,14 +523,12 @@ def test_pq_index_full_probe_equals_pq_topk(spark, tmp_path):
     assert got_df == want
 
 
-def test_pq_serving_never_reads_the_vector_column(spark, tmp_path):
+def test_pq_serving_never_reads_the_vector_column(built_index):
     """The ADC candidate scan must project (vid, cid, codes) only —
     parquet column pruning keeps the fat vector column on disk
     (ReadSchema excludes v) — and stay partition-pruned to the probed
     cells. This IS the IVF-PQ I/O contract: ~pq_m bytes per candidate."""
-    emb = spark.read.parquet(EMB)
-    cat = TransactionalCatalog(spark=spark, root=str(tmp_path / "lake"))
-    ann_index.build_ivf_index(cat, emb, pq_m=8)
+    cat, _ = built_index(pq_m=8)
     out = ann_index.ivf_index_pq_topk(cat, QIDS, k=5, nprobe=4)
     plan = out._jdf.queryExecution().executedPlan().toString()
     scans = [l for l in plan.splitlines() if "FileScan parquet" in l]
@@ -533,14 +559,13 @@ def test_pq_extend_encodes_with_frozen_codebook(spark, tmp_path):
     assert got == want and got
 
 
-def test_pq_tombstones_and_compaction_preserve_codes(spark, tmp_path):
+def test_pq_tombstones_and_compaction_preserve_codes(spark, built_index):
     """The delete lifecycle composes with PQ storage: a removed id
     vanishes from ADC rankings on both paths, compact_index physically
     drops its rows while preserving the codes column, the codebook
     table, and the served values."""
     emb = spark.read.parquet(EMB)
-    cat = TransactionalCatalog(spark=spark, root=str(tmp_path / "lake"))
-    ann_index.build_ivf_index(cat, emb, pq_m=8)
+    cat, _ = built_index(pq_m=8)
     base = ann_index.ivf_index_pq_topk(cat, QIDS, k=5).collect()
     victim = int(base[0]["neighbor_id"])
     ann_index.remove_ids(cat, [victim])
@@ -565,14 +590,13 @@ def test_pq_tombstones_and_compaction_preserve_codes(spark, tmp_path):
     assert _adc_rows(ann_index.ivf_index_pq_topk(cat, QIDS, k=5)) == after_rows
 
 
-def test_pq_index_requires_codebook(spark, tmp_path):
+def test_pq_index_requires_codebook(spark, built_index):
     """A flat (no-PQ) index refuses ADC serving with a clear error —
     never a silent wrong answer."""
     import pytest
 
     emb = spark.read.parquet(EMB)
-    cat = TransactionalCatalog(spark=spark, root=str(tmp_path / "lake"))
-    ann_index.build_ivf_index(cat, emb)
+    cat, _ = built_index()
     with pytest.raises(ValueError, match="no PQ codebook"):
         ann_index.ivf_index_pq_topk(cat, QIDS, k=5)
     with pytest.raises(ValueError, match="no PQ codebook"):
@@ -581,7 +605,7 @@ def test_pq_index_requires_codebook(spark, tmp_path):
         )
 
 
-def test_pq_rerank_recovers_exact_ranking(spark, tmp_path):
+def test_pq_rerank_recovers_exact_ranking(spark, built_index):
     """Full probe + a shortlist covering the corpus makes the refine
     step EXACT: rerank output == ivf_topk full-probe (exact cosine)
     over the index's own centroids — on the list path AND the bulk
@@ -589,8 +613,7 @@ def test_pq_rerank_recovers_exact_ranking(spark, tmp_path):
     from the refined ranking."""
     emb = spark.read.parquet(EMB)
     n = emb.count()
-    cat = TransactionalCatalog(spark=spark, root=str(tmp_path / "lake"))
-    cents = ann_index.build_ivf_index(cat, emb, pq_m=8)
+    cat, cents = built_index(pq_m=8)
     want = _rows(
         similarity.ivf_topk(emb, QIDS, k=5, nprobe=16, centroids=cents)
     )
@@ -766,14 +789,12 @@ def test_ann_cache_root_sweeps_stale_fingerprints(tmp_path):
     shutil.rmtree(r2, ignore_errors=True)
 
 
-def test_pending_tombstones_and_compact_report(spark, tmp_path):
+def test_pending_tombstones_and_compact_report(built_index):
     """pending_tombstones counts DISTINCT not-yet-folded vids (a
     duplicated tombstone from a lost race counts once); compact_index
     reports both the reclaimed rows and the cleared tombstones, and the
     pending number returns to zero."""
-    emb = spark.read.parquet(EMB)
-    cat = TransactionalCatalog(spark=spark, root=str(tmp_path / "lake"))
-    ann_index.build_ivf_index(cat, emb)
+    cat, _ = built_index()
     assert ann_index.pending_tombstones(cat) == 0  # no-deletes fast path
 
     ann_index.remove_ids(cat, [3, 57])

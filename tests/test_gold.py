@@ -9,8 +9,8 @@ from gcp_datalake_pipeline_spark.pipelines.runner import ingest
 FIXTURES = "tests/fixtures/*.csv"
 
 
-def test_latest_revision_after_rerun(catalog):
-    ingest(catalog, FIXTURES)
+def test_latest_revision_after_rerun(ingested):
+    catalog, _ = ingested  # first run
     ingest(catalog, FIXTURES)  # history doubles
     assert catalog.read("revision_tecnica").count() == 6
     latest = latest_revision_tecnica(catalog)
@@ -28,8 +28,8 @@ def test_latest_revision_after_rerun(catalog):
     assert per_vehicle == max_ids
 
 
-def test_vehicle_current_state(catalog):
-    ingest(catalog, FIXTURES)
+def test_vehicle_current_state(ingested):
+    catalog, _ = ingested
     state = {r["registration_plate"]: r for r in vehicle_current_state(catalog).collect()}
     assert set(state) == {"AAAA11", "BBBB22", "DDDD44"}
     assert state["AAAA11"]["carrier_name"] == "EMPRESA UNO RENOMBRADA"
@@ -51,10 +51,10 @@ def test_idempotent_ingest_skips_processed(catalog):
     assert catalog.read("revision_tecnica").count() == n_hist * 2
 
 
-def test_compact_table(catalog):
+def test_compact_table(ingested):
     import glob as g
 
-    ingest(catalog, FIXTURES)
+    catalog, _ = ingested  # first run
     ingest(catalog, FIXTURES)
     from gcp_datalake_pipeline_spark.storage import compact_table
 

@@ -6,6 +6,8 @@ The value-equality of the loop vs the full-corpus run is pinned by
 test_curation.test_dedup_ingest_batch_loop_matches_full_corpus (which now
 runs the bucketed layout); these tests pin the SCALE contracts."""
 
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -28,18 +30,53 @@ def _batches(df, id_col, n_batches=3):
     ]
 
 
-def test_docs_table_is_kb_partitioned_on_disk(spark, tmp_path):
+@pytest.fixture(scope="module")
+def _dedup_rounds(spark, tmp_path_factory):
+    """``n -> root``: a transactional catalog after the first ``n``
+    ``dedup_ingest_batch`` rounds over the three doc batches, built on
+    first use and shared by the module's tests through ``dedup_lake``."""
+    roots = {}
+
+    def get(n):
+        if n not in roots:
+            root = str(tmp_path_factory.mktemp("dedup_rounds") / "lake")
+            if n > 1:
+                shutil.copytree(get(n - 1), root)
+            cat = TransactionalCatalog(spark=spark, root=root)
+            docs = spark.read.parquet(DOCS)
+            corpus.dedup_ingest_batch(cat, _batches(docs, "doc_id")[n - 1])
+            roots[n] = root
+        return roots[n]
+
+    return get
+
+
+@pytest.fixture()
+def dedup_lake(spark, _dedup_rounds, tmp_path):
+    """``dedup_lake(n)``: a fresh transactional catalog in the state the
+    first ``n`` rounds of ``dedup_ingest_batch`` over ``_batches(docs)``
+    leave an empty one in. It is a copy of the shared rounds; the
+    manifest holds only paths relative to the root, so the copy is the
+    same catalog."""
+
+    def make(n):
+        lake = str(tmp_path / "lake")
+        shutil.copytree(_dedup_rounds(n), lake)
+        return TransactionalCatalog(spark=spark, root=lake)
+
+    return make
+
+
+def test_docs_table_is_kb_partitioned_on_disk(spark, dedup_lake):
     """The ingest loop stores the corpus hash-partitioned on doc_id so
     verification reads can prune; the sidecar bucket metadata makes
     compaction preserve the layout."""
     import json
     import os
 
-    cat = TransactionalCatalog(spark=spark, root=str(tmp_path / "lake"))
     docs = spark.read.parquet(DOCS)
     b1, b2, _ = _batches(docs, "doc_id")
-    corpus.dedup_ingest_batch(cat, b1)
-    corpus.dedup_ingest_batch(cat, b2)
+    cat = dedup_lake(2)  # rounds b1, b2
     dirs = cat._data_dirs("corpus_docs")
     kb_dirs = {
         d for dd in dirs for d in os.listdir(dd) if d.startswith("_kb=")
@@ -53,16 +90,15 @@ def test_docs_table_is_kb_partitioned_on_disk(spark, tmp_path):
     assert cat.read("corpus_docs").count() == b1.count() + b2.count()
 
 
-def test_member_fetch_is_partition_pruned(spark, tmp_path):
+def test_member_fetch_is_partition_pruned(spark, dedup_lake):
     """THE round-6 contract: the verification read of candidate members
     scans only their _kb buckets — PartitionFilters present in the
     FileScan, never a full-table scan. At 100 TB this is the difference
     between opening a handful of buckets and re-reading the corpus every
     ingest round."""
-    cat = TransactionalCatalog(spark=spark, root=str(tmp_path / "lake"))
     docs = spark.read.parquet(DOCS)
     b1, b2, _ = _batches(docs, "doc_id")
-    corpus.dedup_ingest_batch(cat, b1)
+    cat = dedup_lake(1)  # round b1
 
     member_ids = b1.select("doc_id").limit(5)
     pruned = corpus._bucket_pruned_members(
@@ -322,7 +358,7 @@ def test_streaming_dedup_ingest_loop(spark, tmp_path):
     } == full
 
 
-def test_compacted_corpus_still_prunes_and_ingests(spark, tmp_path):
+def test_compacted_corpus_still_prunes_and_ingests(spark, dedup_lake):
     """Long-run maintenance interop: after compact() folds the
     append-grown bucketed corpus into one dir, the _kb layout survives
     (bucket-meta sidecar) and the next ingest round still verifies
@@ -330,10 +366,8 @@ def test_compacted_corpus_still_prunes_and_ingests(spark, tmp_path):
     from gcp_datalake_pipeline_spark.operators.dedup import minhash_lsh_pairs
 
     docs = spark.read.parquet(DOCS)
-    b1, b2, b3 = _batches(docs, "doc_id")
-    cat = TransactionalCatalog(spark=spark, root=str(tmp_path / "lake"))
-    corpus.dedup_ingest_batch(cat, b1)
-    corpus.dedup_ingest_batch(cat, b2)
+    b3 = _batches(docs, "doc_id")[2]
+    cat = dedup_lake(2)  # rounds b1, b2
     assert cat.compact("corpus_docs")
     assert len(cat._data_dirs("corpus_docs")) == 1
     assert "_kb" in cat.read("corpus_docs").columns
@@ -1161,7 +1195,9 @@ def test_member_fetch_bloom_skips_where_ranges_cannot(spark, tmp_path):
         assert all(f in entries for f in files), d
 
 
-def test_streaming_loop_refreshes_materialized_views(spark, tmp_path):
+def test_streaming_loop_refreshes_materialized_views(
+    spark, tmp_path, dedup_lake
+):
     """Composition: a materialized view over the corpus docs table
     catches up after every committed streaming round (refresh_views=),
     so a live dashboard reads fresh aggregates without rescanning the
@@ -1175,10 +1211,9 @@ def test_streaming_loop_refreshes_materialized_views(spark, tmp_path):
 
     docs = spark.read.parquet(DOCS)
     paths = _landing_files(docs, "doc_id", str(tmp_path / "landing"))
-    cat = TransactionalCatalog(spark=spark, root=str(tmp_path / "lake"))
     # seed round 1 so the view's source table exists, then register the
     # view and stream the remaining files with auto-refresh
-    corpus.dedup_ingest_batch(cat, _batches(docs, "doc_id")[0])
+    cat = dedup_lake(1)  # round _batches(docs)[0]
     # grouped by the SOURCE's bucket id: the view itself must opt out
     # of its own _kb layout (the names would collide)
     create_materialized_view(
@@ -1208,14 +1243,13 @@ def test_streaming_loop_refreshes_materialized_views(spark, tmp_path):
     assert sum(n for _b, n in got) == docs.count()
 
 
-def test_member_fetch_tolerates_null_member_ids(spark, tmp_path):
+def test_member_fetch_tolerates_null_member_ids(spark, dedup_lake):
     """A NULL id can never equal a stored id (and hashes to a NULL
     bucket), so NULL members are ignored — not a TypeError from sorting
     a mixed [None, int] IN-list (r10 self-review #2)."""
-    cat = TransactionalCatalog(spark=spark, root=str(tmp_path / "lake"))
     docs = spark.read.parquet(DOCS)
     b1, _, _ = _batches(docs, "doc_id")
-    corpus.dedup_ingest_batch(cat, b1)
+    cat = dedup_lake(1)  # round b1
     member_ids = b1.select("doc_id").limit(5).unionByName(
         spark.range(1).select(F.lit(None).cast("long").alias("doc_id"))
     )

@@ -99,8 +99,8 @@ def test_empresa_history_version_chain(catalog, spark, tmp_path):
     assert all(r["is_current"] for r in others.collect())
 
 
-def test_full_batch(catalog):
-    results = ingest(catalog, "tests/fixtures/*.csv")
+def test_full_batch(ingested):
+    catalog, results = ingested
     by_proc = {v["processor"]: v for v in results.values()}
     assert by_proc["empresa"]["errorCount"] == 2
     assert by_proc["vehiculo"] == {
@@ -186,10 +186,10 @@ def test_full_batch(catalog):
     assert catalog.read("ingestion_manifest").count() == 3
 
 
-def test_rerun_historization_and_frozen_carrier(catalog):
+def test_rerun_historization_and_frozen_carrier(ingested):
     """Re-run grows history tables but not entities; vehiculo carrier_id is
     frozen on update (U3, `services/vehiculo.ts:209`)."""
-    ingest(catalog, "tests/fixtures/*.csv")
+    catalog, _ = ingested  # first run
     v1 = {r["registration_plate"]: r for r in catalog.read("vehiculo").collect()}
     rt1 = catalog.read("revision_tecnica").count()
     hv1 = catalog.read("hoja_vida").count()
