@@ -29,9 +29,9 @@ Spark-first shape:
   buckets (:func:`~.sampling.hash_sample` convention), so "train on a
   held-out slice" is a narrow filter, stable under corpus growth.
 
-``hash_mode="md5"`` makes the whole pipeline value-level
-oracle-checkable (the DSIR / dedup 60-bit md5-prefix convention DuckDB
-rebuilds nibble-by-nibble); "xxhash64" is the production hash.
+Features hash to the DSIR / dedup 60-bit md5 prefix, which DuckDB
+rebuilds nibble-by-nibble, so the whole pipeline is value-level
+oracle-checked (:func:`nb_classify_oracle_sql`).
 
 Reference boundary: the reference engine's only classification is
 rule-based field validation (`etl-gcs-cloudsql/src/services/*.ts`);
@@ -51,7 +51,6 @@ def nb_train(
     label_col: str = "lang",
     buckets: int = 1024,
     alpha: float = 1.0,
-    hash_mode: str = "xxhash64",
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> tuple[DataFrame, DataFrame]:
@@ -65,9 +64,9 @@ def nb_train(
     labeled = train.select(
         F.col(id_col).alias("doc_id"), F.col(label_col).alias("label")
     )
-    bc = doc_bucket_counts(
-        train, buckets, hash_mode, text_col, id_col
-    ).join(labeled, "doc_id")
+    bc = doc_bucket_counts(train, buckets, text_col, id_col).join(
+        labeled, "doc_id"
+    )
     feats = bc.groupBy("label", "bucket").agg(F.sum("cnt").alias("cnt"))
     n_total = train.count()
     classes = (
@@ -92,7 +91,6 @@ def nb_classify(
     label_col: str = "lang",
     buckets: int = 1024,
     alpha: float = 1.0,
-    hash_mode: str = "xxhash64",
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
@@ -101,9 +99,9 @@ def nb_classify(
     log-score / 1e6, ties broken by label order. Documents with no
     features (empty text still yields its '' token) always classify."""
     classes, feats = nb_train(
-        train, label_col, buckets, alpha, hash_mode, text_col, id_col
+        train, label_col, buckets, alpha, text_col, id_col
     )
-    bc = doc_bucket_counts(docs, buckets, hash_mode, text_col, id_col)
+    bc = doc_bucket_counts(docs, buckets, text_col, id_col)
     # fan out each (doc, bucket) to |classes| rows of the broadcast
     # model; unseen (class, bucket) pairs fall back to the alpha floor
     model_feats = feats.withColumnRenamed("cnt", "ccnt")

@@ -225,6 +225,23 @@ def _conflict_anchor_bands(catalog, bands_table: str, base_rels) -> None:
     intent["base"] = base_rels
 
 
+def _check_band_index(existing_bands: DataFrame, bands_table: str) -> None:
+    """Refuse a stored band index whose ``band_hash`` is not the md5 hex
+    string :func:`~gcp_datalake_pipeline_spark.operators.dedup.minhash_bands`
+    writes. An older index stored 64-bit integer band hashes; the probe
+    union would silently widen them to strings that never match, and
+    every candidate against the older corpus would be lost. Reads the
+    schema only (no job)."""
+    dtype = dict(existing_bands.dtypes).get("band_hash")
+    if dtype != "string":
+        raise ValueError(
+            f"band index table {bands_table!r} stores band_hash as "
+            f"{dtype}, not the md5 hex string this engine writes; drop "
+            f"{bands_table!r} and the next round rebuilds it from the "
+            "stored docs"
+        )
+
+
 def dedup_ingest_batch(
     catalog,
     batch: DataFrame,
@@ -234,7 +251,6 @@ def dedup_ingest_batch(
     threshold: float = 0.8,
     num_perm: int = 32,
     bands: int = 8,
-    hash_mode: str = "xxhash64",
     num_buckets: int = 64,
     load_id: str | None = None,
     rounds_table: str | None = None,
@@ -275,6 +291,11 @@ def dedup_ingest_batch(
     stream's per-round metrics stay visible (the streaming runner
     returns records only for availableNow drains).
 
+    A docs table without a band index (populated by another path, or
+    the index was dropped) rebuilds the index from the stored docs in
+    this round. A band index whose ``band_hash`` is not the md5 hex
+    string is refused (:func:`_check_band_index`).
+
     Returns the batch's near-dup pairs (doc_a, doc_b, jaccard), also
     appended to ``pairs_table``.
     """
@@ -311,25 +332,30 @@ def dedup_ingest_batch(
 
     else:
         existing = batch.sparkSession.createDataFrame([], batch.schema)
-    # Bands gated on their own existence: a docs table populated by
-    # another path (no index yet) degrades to recomputing the bands from
-    # the stored docs instead of failing the round.
-    existing_bands = (
-        catalog.read(bands_table)
-        if has_docs and catalog.exists(bands_table)
-        else None
-    )
+    # Bands gated on their own existence. A rebuilt index is persisted
+    # with this round's rows, so later rounds probe the whole corpus.
+    rebuilt_bands = None
+    if has_docs and catalog.exists(bands_table):
+        existing_bands = catalog.read(bands_table)
+        _check_band_index(existing_bands, bands_table)
+    elif has_docs:
+        existing_bands = rebuilt_bands = minhash_bands(
+            existing, num_perm, bands
+        ).localCheckpoint(eager=True)
+    else:
+        existing_bands = None
     pairs = incremental_near_dups(
         existing,
         batch,
         threshold=threshold,
         num_perm=num_perm,
         bands=bands,
-        hash_mode=hash_mode,
         existing_bands=existing_bands,
         fetch_texts=fetch_texts,
     ).localCheckpoint(eager=True)  # compute BEFORE the appends change state
-    new_bands = minhash_bands(batch, num_perm, bands, hash_mode)
+    new_bands = minhash_bands(batch, num_perm, bands)
+    if rebuilt_bands is not None:
+        new_bands = rebuilt_bands.unionByName(new_bands)
     batch_out = (
         batch.withColumn("_kb", _key_bucket("doc_id", num_buckets))
         if bucketed

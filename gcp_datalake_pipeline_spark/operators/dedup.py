@@ -1,13 +1,23 @@
 """Deduplication operators: exact, shingle-Jaccard, MinHash+LSH, SimHash.
 
-All set-based DataFrame plans (no Python row path). Near-dup detection uses
-3-word shingles (standard for document dedup: shingle sets are sparse, so
-candidate joins stay selective even when the token vocabulary is tiny).
-MinHash/LSH is the 100 TB path — candidate generation is linear in corpus
-size x bands; the exact shingle-Jaccard self-join is its verifier.
+Set-based DataFrame plans, except the MinHash and SimHash per-document
+kernels, which run as Arrow/numpy ``mapInPandas`` passes. Near-dup
+detection uses 3-word shingles (standard for document dedup: shingle sets
+are sparse, so candidate joins stay selective even when the token
+vocabulary is tiny). MinHash/LSH is the 100 TB path — candidate
+generation is linear in corpus size x bands; the exact shingle-Jaccard
+self-join is its verifier.
+
+MinHash and SimHash hash every shingle with ONE hash, the 60-bit md5
+prefix (:func:`_hash60`), which DuckDB rebuilds nibble by nibble
+(:data:`_HASH60_CTE`). So the code path every caller runs — the
+registry queries, the dedup ingest loop and the streaming loop — is the
+one the DuckDB oracles check value for value.
 """
 
 from __future__ import annotations
+
+from hashlib import md5
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -19,7 +29,7 @@ SHINGLE_N = 3
 
 # Python twin of the engine-wide whitespace tokenizer. re.ASCII pins
 # Python's \s to [ \t\n\r\f\x0B] — exactly Java's non-UNICODE_CLASS \s —
-# so the Arrow backends shingle byte-identically to F.split(text, '\s+').
+# so the Arrow kernels shingle byte-identically to F.split(text, '\s+').
 _PY_TOKEN_SPLIT = None
 
 
@@ -37,6 +47,13 @@ def _py_shingles(toks: list, n: int = SHINGLE_N) -> set:
     if len(toks) < n:
         return set()
     return {" ".join(toks[j : j + n]) for j in range(len(toks) - n + 1)}
+
+
+def _hash60(s: str) -> int:
+    """The near-dup shingle hash: the first 15 hex digits of md5 as a
+    60-bit int. It fits a signed BIGINT in both engines, and DuckDB
+    rebuilds it nibble by nibble (:data:`_HASH60_CTE`)."""
+    return int(md5(s.encode()).hexdigest()[:15], 16)
 
 
 def exact_dedup(df: DataFrame) -> DataFrame:
@@ -231,22 +248,18 @@ _HASH60_CTE = """
     )"""
 
 
-def minhash_lsh_oracle_sql(
-    num_perm: int = 32, bands: int = 8, threshold: float = 0.8
-) -> str:
-    """DuckDB oracle reproducing minhash_lsh_pairs(hash_mode="md5")
-    VALUE-FOR-VALUE: same 60-bit md5-derived base hash (rebuilt
-    nibble-by-nibble), same (a*h+b) mod P permutation constants, md5 of
-    the comma-joined band slice, join on (band_id, band_hash), candidates
-    verified with exact Jaccard."""
+def _lsh_candidate_ctes(num_perm: int, bands: int) -> str:
+    """DuckDB CTE block shared by the MinHash+LSH oracles, after
+    :data:`_HASH60_CTE`: the permutation constants, per-document
+    signature elements (``sigel``), the band index (``bandhash``: md5 of
+    the comma-joined band slice), band-collision candidates (``cand``)
+    and their exact shingle ``sizes``/``inter`` counts."""
     rows_per_band = num_perm // bands
     param_rows = ", ".join(
         f"({i}, {a}, {b})"
         for i, (a, b) in enumerate(minhash_perm_params(num_perm))
     )
     return f"""
-    WITH {_SHINGLE_CTE},
-    {_HASH60_CTE},
     params(i, a, b) AS (VALUES {param_rows}),
     sigel AS (
       SELECT doc_id, p.i AS seed,
@@ -270,7 +283,20 @@ def minhash_lsh_oracle_sql(
       FROM cand c JOIN sh a ON a.doc_id = c.doc_a
                   JOIN sh b ON b.doc_id = c.doc_b AND b.shingle = a.shingle
       GROUP BY 1, 2
-    )
+    )"""
+
+
+def minhash_lsh_oracle_sql(
+    num_perm: int = 32, bands: int = 8, threshold: float = 0.8
+) -> str:
+    """DuckDB oracle reproducing :func:`minhash_lsh_pairs`
+    VALUE-FOR-VALUE: same 60-bit md5-derived base hash (rebuilt
+    nibble-by-nibble), same (a*h+b) mod P permutation constants, md5 of
+    the comma-joined band slice, join on (band_id, band_hash), candidates
+    verified with exact Jaccard."""
+    return f"""
+    WITH {_SHINGLE_CTE},
+    {_HASH60_CTE},{_lsh_candidate_ctes(num_perm, bands)}
     SELECT doc_a, doc_b,
            ROUND(inter / (sa.sz + sb.sz - inter), 4) AS jaccard
     FROM inter JOIN sizes sa ON sa.doc_id = doc_a
@@ -295,28 +321,22 @@ def minhash_perm_params(num_perm: int = 32, seed: int = 7) -> list[tuple[int, in
 
 
 def _minhash_sigs_py(num_perm: int):
-    """Per-document md5 MinHash signature kernel shared by the Arrow
-    backends: token list -> numpy sig vector (or None when the document
-    has no shingles — the explode+groupBy contract)."""
-    import hashlib
-
+    """Per-document MinHash signature kernel shared by
+    :func:`minhash_signatures` and :func:`minhash_bands`: token list ->
+    numpy sig vector (or None when the document has no shingles)."""
     import numpy as np
 
     params = minhash_perm_params(num_perm)
     A = np.array([a for a, _ in params], dtype=np.uint64)[:, None]
     B = np.array([b for _, b in params], dtype=np.uint64)[:, None]
     P = np.uint64(MINHASH_P)
-    md5 = hashlib.md5
 
     def sig_of(toks: list):
         sh = _py_shingles(toks)
         if not sh:
             return None
         hs = np.fromiter(
-            (
-                int(md5(s.encode()).hexdigest()[:15], 16) % MINHASH_P
-                for s in sh
-            ),
+            (_hash60(s) % MINHASH_P for s in sh),
             dtype=np.uint64,
             count=len(sh),
         )
@@ -325,13 +345,22 @@ def _minhash_sigs_py(num_perm: int):
     return sig_of
 
 
-def _minhash_signatures_arrow_md5(df: DataFrame, num_perm: int) -> DataFrame:
-    """Arrow/numpy backend for ``minhash_signatures(hash_mode='md5')`` —
-    identical values to the JVM shape (pinned in tests): the md5 base
-    hash and the (a*h+b) mod P permutations are exact integer math on
-    both sides. Zero shuffles; the explode + 32-wide codegen'd min
-    aggregate collapses into one vectorized numpy min per document
-    (guide §4.2)."""
+def minhash_signatures(df: DataFrame, num_perm: int = 32) -> DataFrame:
+    """MinHash signatures over shingle sets. Output: (doc_id, sig:
+    array<bigint>), sig[i] = min over shingles of h_i(shingle).
+
+    Permutations use universal hashing over ONE base hash per shingle:
+    h_i(x) = (a_i * (base(x) mod P) + b_i) mod P, P = 2^31-1 — 32
+    multiply-mods per shingle instead of 32 full hash computations
+    (measured 3-4x faster than hashing per seed at sf0.1). The base hash
+    is the 60-bit md5 prefix (:func:`_hash60`) that DuckDB rebuilds
+    nibble-by-nibble, so the whole MinHash+LSH pipeline is value-level
+    oracle-checked (:func:`minhash_lsh_oracle_sql`).
+
+    Arrow/numpy kernel: tokenize, shingle and md5 run in C (re, hashlib)
+    and the permutation mins are one vectorized numpy reduction per
+    document (guide §4.2). Zero shuffles. Documents with no shingles
+    (under 3 tokens, empty or NULL text) yield no row."""
     import numpy as np
     import pandas as pd
 
@@ -358,15 +387,72 @@ def _minhash_signatures_arrow_md5(df: DataFrame, num_perm: int) -> DataFrame:
     )
 
 
-def _minhash_bands_arrow_md5(
-    df: DataFrame, num_perm: int, bands: int
+def minhash_lsh_pairs(
+    df: DataFrame,
+    num_perm: int = 32,
+    bands: int = 8,
+    threshold: float = 0.8,
 ) -> DataFrame:
-    """Arrow/numpy backend for ``minhash_bands(hash_mode='md5')``:
-    signature + band hashing fused into ONE per-row pass (the JVM shape
-    pays an explode of the band index and an md5 over a concat_ws
-    projection). Identical values (pinned in tests)."""
-    import hashlib
+    """MinHash + LSH banding candidate generation, verified with exact
+    shingle Jaccard. Output: (doc_a, doc_b, jaccard) — the LSH-accelerated
+    equivalent of :func:`jaccard_pairs` (recall < 1 by design; with 8 bands
+    of 4 rows, P[candidate] ~ 1-(1-j^4)^8, >99% at j=0.8). Value-level
+    oracle: :func:`minhash_lsh_oracle_sql`.
 
+    Scale: the only pair-producing join is on (band_id, band_hash) buckets;
+    bucket collisions require 4 simultaneous minhash matches, so random
+    pairs almost never collide and candidate count stays near-linear.
+
+    Verification shingling is CANDIDATE-proportional end to end (r13
+    optimization): the candidate pair list is materialized first and the
+    DOCUMENT table is semi-joined down to pair members BEFORE the shingle
+    explode, so the corpus is tokenized once (for banding), not twice —
+    previously the verifier re-shingled every document and semi-joined
+    the exploded result (the filter ran above the expensive Generate;
+    guide §2.3: project/filter before the heavy work).
+    """
+    # Materialize the band index ONCE before the self-join: both join
+    # sides otherwise re-run the whole signature pipeline (corpus
+    # tokenize + shingle + hash per side — the kernel is opaque to
+    # Spark's common-subexpression reuse). The index is 8 small rows
+    # per document, bounded at any scale.
+    band = minhash_bands(df, num_perm, bands).localCheckpoint(eager=True)
+    a, b = band.alias("a"), band.alias("b")
+    candidates = (
+        a.join(
+            b,
+            (F.col("a.band_id") == F.col("b.band_id"))
+            & (F.col("a.band_hash") == F.col("b.band_hash"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(
+            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+        )
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    member_docs = df.join(_pair_members(candidates), "doc_id", "semi")
+    return _pair_jaccard(
+        doc_shingles(member_docs),
+        candidates,
+        threshold,
+        pairs_materialized=True,
+        members_restricted=True,
+    )
+
+
+def minhash_bands(
+    df: DataFrame, num_perm: int = 32, bands: int = 8
+) -> DataFrame:
+    """The LSH band INDEX of a corpus: (doc_id, band_id, band_hash), one
+    row per document per band, ``band_hash`` the md5 hex of the band's
+    comma-joined signature slice. This is the table a production
+    pipeline PERSISTS (e.g. ``catalog.append`` per ingest batch): new
+    batches probe it instead of re-banding the whole corpus — see
+    :func:`incremental_near_dups`.
+
+    Signature and band hashing are fused into ONE per-row Arrow pass
+    (the :func:`minhash_signatures` kernel plus one md5 per band)."""
     import numpy as np
     import pandas as pd
 
@@ -375,7 +461,6 @@ def _minhash_bands_arrow_md5(
     def compute(it):
         split = _py_tokenizer()
         sig_of = _minhash_sigs_py(num_perm)
-        md5 = hashlib.md5
         for pdf in it:
             ids, bids, bhs = [], [], []
             for did, txt in zip(pdf["doc_id"].values, pdf["text"].values):
@@ -403,163 +488,11 @@ def _minhash_bands_arrow_md5(
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    num_perm: int = 32,
-    hash_mode: str = "xxhash64",
-    backend: str = "auto",
-) -> DataFrame:
-    """MinHash signatures over shingle sets. Output: (doc_id, sig:
-    array<bigint>), sig[i] = min over shingles of h_i(shingle).
-
-    Permutations use universal hashing over ONE base hash per shingle:
-    h_i(x) = (a_i * (base(x) mod P) + b_i) mod P, P = 2^31-1 — 32
-    multiply-mods per shingle instead of 32 full hash computations
-    (measured 3-4x faster than hashing per seed at sf0.1).
-
-    ``hash_mode`` picks the base hash only:
-    - "xxhash64" (production): fastest JVM hash.
-    - "md5" (oracle parity): 60-bit int from the first 15 md5 hex chars,
-      which DuckDB rebuilds nibble-by-nibble — the whole MinHash+LSH
-      pipeline becomes value-level oracle-checkable
-      (:func:`minhash_lsh_oracle_sql`). Same plan shape, same scale story.
-
-    Shape: explode shingles, hash each ONCE, then one groupBy(doc_id) with
-    num_perm codegen'd min() aggregates (assembled into the sig array).
-    The min aggs run inside whole-stage codegen with map-side partial
-    aggregation, so the shuffle carries one num_perm-wide partial row per
-    doc per map partition (~256 B/doc) — measured 2x faster than the
-    narrow interpreted aggregate/zip_with fold, which Spark cannot
-    codegen. (And never hash per (shingle, seed): 32 full hashes per
-    shingle was another 3x on top; the seeds-outer array formulation that
-    rebuilt the shingle array per seed was 70x.)
-    """
-    params = minhash_perm_params(num_perm)
-    if hash_mode == "md5":
-        if backend in ("auto", "arrow"):
-            return _minhash_signatures_arrow_md5(df, num_perm)
-        base = F.conv(F.substring(F.md5("shingle"), 1, 15), 16, 10).cast("long")
-    else:
-        if backend == "arrow":
-            raise ValueError("arrow backend requires hash_mode='md5'")
-        base = F.xxhash64("shingle")
-    sh = doc_shingles(df).select(
-        "doc_id", F.pmod(base, F.lit(MINHASH_P)).alias("_hm")
-    )
-    sigs = sh.groupBy("doc_id").agg(
-        *[
-            F.min(
-                (F.lit(a).cast("long") * F.col("_hm") + F.lit(b)) % MINHASH_P
-            ).alias(f"_m{i}")
-            for i, (a, b) in enumerate(params)
-        ]
-    )
-    return sigs.select(
-        "doc_id", F.array(*[f"_m{i}" for i in range(num_perm)]).alias("sig")
-    )
-
-
-def minhash_lsh_pairs(
-    df: DataFrame,
-    num_perm: int = 32,
-    bands: int = 8,
-    threshold: float = 0.8,
-    hash_mode: str = "xxhash64",
-) -> DataFrame:
-    """MinHash + LSH banding candidate generation, verified with exact
-    shingle Jaccard. Output: (doc_a, doc_b, jaccard) — the LSH-accelerated
-    equivalent of :func:`jaccard_pairs` (recall < 1 by design; with 8 bands
-    of 4 rows, P[candidate] ~ 1-(1-j^4)^8, >99% at j=0.8).
-
-    ``hash_mode="md5"`` swaps the hash for the DuckDB-reproducible variant
-    (see minhash_signatures) — identical plan shape, value-level oracle.
-
-    Scale: the only pair-producing join is on (band_id, band_hash) buckets;
-    bucket collisions require 4 simultaneous minhash matches, so random
-    pairs almost never collide and candidate count stays near-linear.
-
-    Verification shingling is CANDIDATE-proportional end to end (r13
-    optimization): the candidate pair list is materialized first and the
-    DOCUMENT table is semi-joined down to pair members BEFORE the shingle
-    explode, so the corpus is tokenized once (for banding), not twice —
-    previously the verifier re-shingled every document and semi-joined
-    the exploded result (the filter ran above the expensive Generate;
-    guide §2.3: project/filter before the heavy work).
-    """
-    # Materialize the band index ONCE before the self-join: both join
-    # sides otherwise re-run the whole signature pipeline (corpus
-    # tokenize + shingle + hash per side — the kernel is opaque to
-    # Spark's common-subexpression reuse). The index is 8 small rows
-    # per document, bounded at any scale.
-    band = minhash_bands(df, num_perm, bands, hash_mode).localCheckpoint(
-        eager=True
-    )
-    a, b = band.alias("a"), band.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    member_docs = df.join(_pair_members(candidates), "doc_id", "semi")
-    return _pair_jaccard(
-        doc_shingles(member_docs),
-        candidates,
-        threshold,
-        pairs_materialized=True,
-        members_restricted=True,
-    )
-
-
-def minhash_bands(
-    df: DataFrame,
-    num_perm: int = 32,
-    bands: int = 8,
-    hash_mode: str = "xxhash64",
-    backend: str = "auto",
-) -> DataFrame:
-    """The LSH band INDEX of a corpus: (doc_id, band_id, band_hash), one
-    row per document per band. This is the table a production pipeline
-    PERSISTS (e.g. ``catalog.append`` per ingest batch): new batches
-    probe it instead of re-banding the whole corpus — see
-    :func:`incremental_near_dups`.
-
-    md5 mode routes to the fused Arrow kernel by default (identical
-    values, pinned in tests; ~2x faster measured); ``backend="jvm"``
-    forces the codegen shape."""
-    if hash_mode == "md5" and backend in ("auto", "arrow"):
-        return _minhash_bands_arrow_md5(df, num_perm, bands)
-    rows_per_band = num_perm // bands
-    sigs = minhash_signatures(df, num_perm, hash_mode, backend=backend)
-    band_slice = F.concat_ws(
-        ",",
-        F.slice(
-            F.col("sig"), F.col("band_id") * rows_per_band + 1, rows_per_band
-        ).cast("array<string>"),
-    )
-    band_hash = (
-        F.md5(band_slice) if hash_mode == "md5" else F.xxhash64(band_slice)
-    )
-    return sigs.select(
-        "doc_id",
-        F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band_id"),
-        "sig",
-    ).select("doc_id", "band_id", band_hash.alias("band_hash"))
-
-
 def near_dup_clusters_lsh(
     df: DataFrame,
     num_perm: int = 32,
     bands: int = 8,
     threshold: float = 0.8,
-    hash_mode: str = "xxhash64",
     max_iter: int = 15,
     method: str = "label_prop",
 ) -> DataFrame:
@@ -596,9 +529,7 @@ def near_dup_clusters_lsh(
     rep_docs = df.join(
         reps.select(F.col("_rep").alias("doc_id")), "doc_id", "left_semi"
     )
-    rep_pairs = minhash_lsh_pairs(
-        rep_docs, num_perm, bands, threshold, hash_mode
-    )
+    rep_pairs = minhash_lsh_pairs(rep_docs, num_perm, bands, threshold)
     rep_clusters = near_dup_clusters(
         rep_docs, rep_pairs, max_iter, method=method
     )
@@ -620,42 +551,13 @@ def near_dup_clusters_lsh(
 def near_dup_clusters_lsh_oracle_sql(
     num_perm: int = 32, bands: int = 8, threshold: float = 0.8
 ) -> str:
-    """DuckDB oracle for near_dup_clusters_lsh(hash_mode="md5"):
-    transitive closure over the FULL md5-LSH pair graph (the collapse
-    is an equivalence-preserving optimization, so the uncollapsed
-    closure is the semantic ground truth)."""
-    rows_per_band = num_perm // bands
-    param_rows = ", ".join(
-        f"({i}, {a}, {b})"
-        for i, (a, b) in enumerate(minhash_perm_params(num_perm))
-    )
+    """DuckDB oracle for :func:`near_dup_clusters_lsh`: transitive
+    closure over the FULL md5-LSH pair graph (the collapse is an
+    equivalence-preserving optimization, so the uncollapsed closure is
+    the semantic ground truth)."""
     return f"""
     WITH RECURSIVE {_SHINGLE_CTE},
-    {_HASH60_CTE},
-    params(i, a, b) AS (VALUES {param_rows}),
-    sigel AS (
-      SELECT doc_id, p.i AS seed,
-             MIN((p.a * (h % {MINHASH_P}) + p.b) % {MINHASH_P}) AS mh
-      FROM hvals CROSS JOIN params p GROUP BY doc_id, p.i
-    ),
-    bandhash AS (
-      SELECT doc_id, CAST(seed // {rows_per_band} AS INT) AS band_id,
-             md5(string_agg(mh::VARCHAR, ',' ORDER BY seed)) AS band_hash
-      FROM sigel GROUP BY doc_id, seed // {rows_per_band}
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM bandhash a JOIN bandhash b
-        ON a.band_id = b.band_id AND a.band_hash = b.band_hash
-       AND a.doc_id < b.doc_id
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT c.doc_a, c.doc_b, COUNT(*) AS inter
-      FROM cand c JOIN sh a ON a.doc_id = c.doc_a
-                  JOIN sh b ON b.doc_id = c.doc_b AND b.shingle = a.shingle
-      GROUP BY 1, 2
-    ),
+    {_HASH60_CTE},{_lsh_candidate_ctes(num_perm, bands)},
     jp AS (
       SELECT doc_a, doc_b
       FROM inter JOIN sizes sa ON sa.doc_id = doc_a
@@ -694,7 +596,6 @@ def incremental_near_dups(
     threshold: float = 0.8,
     num_perm: int = 32,
     bands: int = 8,
-    hash_mode: str = "xxhash64",
     existing_bands: DataFrame | None = None,
     fetch_texts=None,
 ) -> DataFrame:
@@ -725,13 +626,11 @@ def incremental_near_dups(
     before the fetch, so the fetcher may safely collect bucket ids.
     """
     if existing_bands is None:
-        existing_bands = minhash_bands(existing, num_perm, bands, hash_mode)
+        existing_bands = minhash_bands(existing, num_perm, bands)
     # materialized: the probe union AND the join's b side both consume
     # the new batch's bands — unmaterialized, the signature kernel would
     # run twice over the batch (opaque to plan-level reuse)
-    new_bands = minhash_bands(new, num_perm, bands, hash_mode).localCheckpoint(
-        eager=True
-    )
+    new_bands = minhash_bands(new, num_perm, bands).localCheckpoint(eager=True)
     probe = existing_bands.unionByName(new_bands).alias("a")
     cand = (
         probe.join(
@@ -1070,24 +969,29 @@ def near_dup_clusters_oracle_sql(threshold: float = 0.8) -> str:
     """
 
 
-def _simhash_arrow_md5(df: DataFrame, bits: int) -> DataFrame:
-    """Arrow/numpy backend for ``simhash(hash_mode='md5')`` — identical
-    values to the JVM shape (pinned in tests), ~3x faster measured:
-    tokenize/shingle/md5 run in C (re, hashlib) and the per-bit vote
-    matrix is ONE vectorized numpy reduction per document instead of 60
-    codegen'd conditional-sum aggregates (guide §4.2: hand whole batches
-    to vectorized native code). Zero shuffles: the explode + groupBy of
-    the JVM shape collapses into a per-row map. Documents with no
-    shingles yield no row (the explode+groupBy contract)."""
+SIMHASH_BITS = 60
+
+
+def simhash(df: DataFrame) -> DataFrame:
+    """SimHash document fingerprints from hashed shingles.
+
+    For each bit position, sum +1/-1 votes across the doc's shingles; the
+    fingerprint sets bits with a positive vote. Output: (doc_id, simhash).
+    Shingles hash to the 60-bit md5 prefix (:func:`_hash60`), so the
+    fingerprint has :data:`SIMHASH_BITS` bits, fits a signed BIGINT, and
+    DuckDB rebuilds it value for value (:func:`simhash_pairs_oracle_sql`).
+
+    Arrow/numpy kernel: tokenize/shingle/md5 run in C (re, hashlib) and
+    the per-bit vote matrix is ONE vectorized numpy reduction per
+    document (guide §4.2: hand whole batches to vectorized native code).
+    Zero shuffles. Documents with no shingles (under 3 tokens, empty or
+    NULL text) yield no row."""
     import numpy as np
     import pandas as pd
 
     def compute(it):
-        import hashlib
-
         split = _py_tokenizer()
-        md5 = hashlib.md5
-        shifts = np.arange(bits, dtype=np.uint64)
+        shifts = np.arange(SIMHASH_BITS, dtype=np.uint64)
         for pdf in it:
             ids, fps = [], []
             for did, txt in zip(pdf["doc_id"].values, pdf["text"].values):
@@ -1095,12 +999,7 @@ def _simhash_arrow_md5(df: DataFrame, bits: int) -> DataFrame:
                 if not sh:
                     continue
                 hs = np.fromiter(
-                    (
-                        int(md5(s.encode()).hexdigest()[:15], 16)
-                        for s in sh
-                    ),
-                    dtype=np.uint64,
-                    count=len(sh),
+                    (_hash60(s) for s in sh), dtype=np.uint64, count=len(sh)
                 )
                 cnt = ((hs[:, None] >> shifts) & np.uint64(1)).sum(axis=0)
                 fp = (
@@ -1120,88 +1019,22 @@ def _simhash_arrow_md5(df: DataFrame, bits: int) -> DataFrame:
     )
 
 
-def simhash(
-    df: DataFrame,
-    bits: int = 64,
-    hash_mode: str = "xxhash64",
-    backend: str = "auto",
-) -> DataFrame:
-    """SimHash document fingerprints from hashed shingles.
-
-    For each bit position, sum +1/-1 votes across the doc's shingles; the
-    fingerprint sets bits with a positive vote. Output: (doc_id, simhash).
-
-    ``hash_mode="md5"`` uses a 60-bit hash parsed from the first 15 md5 hex
-    chars (fits a signed BIGINT without overflow in either engine), which
-    DuckDB can reproduce nibble-by-nibble — see simhash_pairs_oracle_sql.
-    xxhash64 (production) keeps the full 64 bits.
-
-    Formulation note: ONE groupBy(doc_id) carrying ``bits`` codegen'd
-    conditional-sum aggregates (vote per bit), then a single projection
-    packs the sign bits into the fingerprint. No row multiplication: the
-    input to the aggregation is |shingles| rows, each evaluating 64 cheap
-    bit-test expressions inside whole-stage codegen, and the shuffle
-    carries one 64-column partial row per doc per map partition. Measured
-    ~2x faster than the explode(shingle x bit) + two-groupBy shape, which
-    itself was 4x faster than a narrow interpreted-HOF fold.
-
-    ``backend``: "auto" routes md5 mode to the Arrow/numpy kernel
-    (:func:`_simhash_arrow_md5` — identical values, ~3x faster, zero
-    shuffles; equality pinned in tests) and xxhash64 to the JVM shape
-    (Spark's xxhash64 has no Python twin); "jvm" / "arrow" force a side.
-    """
-    from functools import reduce
-
-    if hash_mode == "md5":
-        bits = min(bits, 60)
-        if backend in ("auto", "arrow"):
-            return _simhash_arrow_md5(df, bits)
-        h = F.conv(F.substring(F.md5("shingle"), 1, 15), 16, 10).cast("long")
-    else:
-        if backend == "arrow":
-            raise ValueError("arrow backend requires hash_mode='md5'")
-        h = F.xxhash64("shingle")
-    sh = doc_shingles(df).select("doc_id", h.alias("h"))
-    votes = sh.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(F.expr(f"(shiftright(h, {b}) & 1)") == 1, 1).otherwise(-1)
-            ).alias(f"_v{b}")
-            for b in range(bits)
-        ]
-    )
-    # bit 63 as a signed-long literal wraps to Long.MIN_VALUE (same bit).
-    bitval = lambda b: F.lit((1 << b) if b < 63 else -(2**63)).cast("long")  # noqa: E731
-    fp = reduce(
-        lambda a, b: a + b,
-        [
-            F.when(F.col(f"_v{b}") > 0, bitval(b)).otherwise(
-                F.lit(0).cast("long")
-            )
-            for b in range(bits)
-        ],
-    )
-    return votes.select("doc_id", fp.alias("simhash"))
-
-
-def simhash_near_pairs(
-    df: DataFrame, max_hamming: int = 12, hash_mode: str = "xxhash64"
-) -> DataFrame:
+def simhash_near_pairs(df: DataFrame, max_hamming: int = 12) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance, blocked on 4 equal-width
     bit chunks (pigeonhole: any pair differing in <= 3 of the 4 chunks
     collides on at least one exact chunk; max_hamming spread across >= 4
     chunks can miss — accepted approximation, documented recall tradeoff).
 
-    Chunk width is 16 bits (xxhash64 mode, 64-bit fingerprints) or 15 bits
-    (md5 mode, 60-bit). Output: (doc_a, doc_b, hamming).
+    Chunk width is 15 bits (a quarter of the 60-bit fingerprint).
+    Output: (doc_a, doc_b, hamming).
     """
-    width = 15 if hash_mode == "md5" else 16
+    width = SIMHASH_BITS // 4
     mask = (1 << width) - 1
     # materialized: the chunk self-join below consumes the fingerprints
     # twice, and unmaterialized both sides re-run the whole simhash
     # kernel (corpus tokenize+shingle+hash — opaque to plan-level
     # reuse). One long per document, bounded at any scale.
-    sh = simhash(df, hash_mode=hash_mode).localCheckpoint(eager=True)
+    sh = simhash(df).localCheckpoint(eager=True)
     chunk = F.explode(F.sequence(F.lit(0), F.lit(3))).alias("chunk_id")
     chunks = sh.select("doc_id", "simhash", chunk).select(
         "doc_id",
@@ -1233,14 +1066,7 @@ def simhash_near_pairs(
     )
 
 
-def simhash_pairs_oracle_sql(max_hamming: int = 12) -> str:
-    """DuckDB oracle reproducing simhash_near_pairs(hash_mode="md5")
-    VALUE-FOR-VALUE: the 60-bit hash is rebuilt nibble-by-nibble from the
-    md5 hex (strpos against the hex alphabet), then identical vote /
-    fingerprint / 15-bit-chunk blocking arithmetic on BIGINTs."""
-    return f"""
-    WITH {_SHINGLE_CTE},
-    {_HASH60_CTE},
+_SIMHASH_CTE = """
     bits AS (SELECT unnest(range(0, 60)) AS bit),
     votes AS (
       SELECT doc_id, bit,
@@ -1253,7 +1079,18 @@ def simhash_pairs_oracle_sql(max_hamming: int = 12) -> str:
              SUM(CASE WHEN v > 0 THEN (1::BIGINT << CAST(bit AS INT))
                       ELSE 0::BIGINT END) AS simhash
       FROM votes GROUP BY doc_id
-    ),
+    )"""
+
+
+def simhash_pairs_oracle_sql(max_hamming: int = 12) -> str:
+    """DuckDB oracle reproducing :func:`simhash_near_pairs`
+    VALUE-FOR-VALUE: the 60-bit hash is rebuilt nibble-by-nibble from the
+    md5 hex (strpos against the hex alphabet), then identical vote
+    (:data:`_SIMHASH_CTE`) / 15-bit-chunk blocking arithmetic on
+    BIGINTs."""
+    return f"""
+    WITH {_SHINGLE_CTE},
+    {_HASH60_CTE},{_SIMHASH_CTE},
     cs AS (SELECT unnest(range(0, 4)) AS c),
     chunks AS (
       SELECT doc_id, simhash, c,

@@ -25,11 +25,9 @@ Spark-first shape, each stage shuffle-bounded:
 - selection is a global TakeOrdered top-k (weight desc, doc_id asc),
   never a full sort.
 
-``hash_mode`` follows the engine-wide convention (``dedup.py``):
-"xxhash64" is the production bucket hash; "md5" derives a 60-bit
-bucket from the md5 hex prefix that DuckDB rebuilds nibble-by-nibble,
-making the whole pipeline value-level oracle-checkable
-(:func:`dsir_topk_oracle_sql`). Log-ratios are quantized to INTEGER
+Features hash to the 60-bit md5 hex prefix that ``dedup.py`` also
+uses, which DuckDB rebuilds nibble-by-nibble, so the whole pipeline is
+value-level oracle-checked (:func:`dsir_topk_oracle_sql`). Log-ratios are quantized to INTEGER
 MICRO-UNITS before the weighted sum on both engines (the PQ/SQ8 gate
 discipline), so the per-doc sum is an exact BIGINT — cross-engine
 float-summation order can never flip a rounding boundary.
@@ -46,14 +44,15 @@ _BIGRAMS = (
 )
 
 
-def _doc_bucket_counts(
+def doc_bucket_counts(
     df: DataFrame,
     buckets: int,
-    hash_mode: str,
-    text_col: str,
-    id_col: str,
+    text_col: str = "text",
+    id_col: str = "doc_id",
 ) -> DataFrame:
-    """(doc_id, bucket, cnt): hashed unigram+bigram counts per doc."""
+    """(doc_id, bucket, cnt): hashed unigram+bigram counts per doc —
+    the featurizer shared by DSIR and the Naive Bayes classifier
+    (classify.py): ONE tokenization/hash convention."""
     from gcp_datalake_pipeline_spark.parallelism import (
         ensure_scan_parallelism,
     )
@@ -72,20 +71,10 @@ def _doc_bucket_counts(
             ).alias("f"),
         )
     )
-    if hash_mode == "md5":
-        h = F.conv(F.substring(F.md5("f"), 1, 15), 16, 10).cast("long")
-    elif hash_mode == "xxhash64":
-        h = F.xxhash64("f")
-    else:
-        raise ValueError(f"unknown hash_mode {hash_mode!r}")
+    h = F.conv(F.substring(F.md5("f"), 1, 15), 16, 10).cast("long")
     return ex.groupBy(
         "doc_id", F.pmod(h, F.lit(buckets)).alias("bucket")
     ).agg(F.count("*").alias("cnt"))
-
-
-# public alias: the hashed unigram+bigram featurizer is shared with the
-# Naive Bayes classifier (classify.py) — ONE tokenization/hash convention
-doc_bucket_counts = _doc_bucket_counts
 
 
 def dsir_weights(
@@ -93,7 +82,6 @@ def dsir_weights(
     target: DataFrame,
     buckets: int = 1024,
     alpha: float = 1.0,
-    hash_mode: str = "xxhash64",
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
@@ -107,12 +95,10 @@ def dsir_weights(
     # raw_bc feeds BOTH the bucket totals and the final scoring join —
     # persist it so the (expensive at 100 TB) corpus featurize explode
     # runs once, not twice (the perplexity_bands discipline)
-    raw_bc = _doc_bucket_counts(
-        raw, buckets, hash_mode, text_col, id_col
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    tgt_bc = _doc_bucket_counts(
-        target, buckets, hash_mode, text_col, id_col
+    raw_bc = doc_bucket_counts(raw, buckets, text_col, id_col).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
+    tgt_bc = doc_bucket_counts(target, buckets, text_col, id_col)
     rb = raw_bc.groupBy("bucket").agg(F.sum("cnt").alias("rc"))
     tb = tgt_bc.groupBy("bucket").agg(F.sum("cnt").alias("tc"))
     # bucket log-ratio table: buckets rows, full-outer so a bucket seen
@@ -169,15 +155,12 @@ def dsir_topk(
     k: int = 20,
     buckets: int = 1024,
     alpha: float = 1.0,
-    hash_mode: str = "xxhash64",
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
     """The selection step: top-``k`` raw documents by importance weight
     (desc, doc_id tiebreak) — executes as TakeOrdered, no global sort."""
-    w = dsir_weights(
-        raw, target, buckets, alpha, hash_mode, text_col, id_col
-    )
+    w = dsir_weights(raw, target, buckets, alpha, text_col, id_col)
     return w.orderBy(F.desc("weight"), "doc_id").limit(k)
 
 
@@ -187,7 +170,7 @@ def dsir_topk_oracle_sql(
     alpha: float = 1.0,
     target_pred: str = "lang = 'en'",
 ) -> str:
-    """DuckDB oracle for ``dsir_topk(hash_mode="md5")`` value-for-value:
+    """DuckDB oracle for :func:`dsir_topk` value-for-value:
     same tokenization (lower/trim, whitespace split), same unigram ++
     bigram feature stream, the 60-bit md5-prefix bucket rebuilt
     nibble-by-nibble (the ``dedup.py`` convention), identical Laplace

@@ -142,7 +142,7 @@ def _nb_preds(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket = sampling._hash_bucket(F.col("doc_id"), _NB_SALT)
     train = docs.filter(bucket < _NB_CUT)
     test = docs.filter(bucket >= _NB_CUT)
-    preds = classify.nb_classify(test, train, label_col="lang", hash_mode="md5")
+    preds = classify.nb_classify(test, train, label_col="lang")
     return preds.join(
         docs.select("doc_id", F.col("lang").alias("actual")), "doc_id"
     ).select("doc_id", "actual", "pred", "score")

@@ -3,8 +3,9 @@ sampling) — registered alongside the relational core in the same QUERIES
 registry.
 
 Every query here is value-level oracled, including the approximate family:
-MinHash/SimHash gates run md5-parity hash modes DuckDB reproduces exactly,
-and the ANN gates embed their deterministic plane/centroid constants in the
+MinHash/SimHash/DSIR hash with the 60-bit md5 prefix DuckDB reproduces
+exactly (their only hash, so the gates check what callers run), and the
+ANN gates embed their deterministic plane/centroid constants in the
 oracle SQL. The only rows-only entry in the whole registry is the HLL
 sketch (approximate by nature; bounds are pytest-checked). Approximation
 QUALITY (recall vs the exact operators) is bounded separately in
@@ -160,28 +161,26 @@ def dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_minhash_lsh",
     dedup.minhash_lsh_oracle_sql(num_perm=32, bands=8, threshold=0.8),
     doc="""MinHash(32) + LSH(8 bands) candidates verified by exact Jaccard
-    >= 0.8. Approximate-recall scale path for dedup_jaccard. Gate runs the
-    md5-parity hash mode so the ENTIRE pipeline (signatures, banding,
-    bucket join, verification) is value-level oracled in DuckDB; production
-    default stays xxhash64 (same plan shape, faster hash).""",
+    >= 0.8. Approximate-recall scale path for dedup_jaccard. The 60-bit
+    md5 shingle hash is the only one the operator has, so the ENTIRE
+    pipeline callers run (signatures, banding, bucket join,
+    verification) is value-level oracled in DuckDB.""",
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.minhash_lsh_pairs(
-        load_table(spark, sf_dir, "documents"), threshold=0.8, hash_mode="md5"
+        load_table(spark, sf_dir, "documents"), threshold=0.8
     )
 
 
 @register(
     "dedup_simhash",
     dedup.simhash_pairs_oracle_sql(max_hamming=12),
-    doc="""SimHash near-dup pairs, 4-chunk blocked, hamming<=12. Gate runs
-    the md5-parity 60-bit mode so fingerprints, blocking and hamming are
-    value-level oracled; production default stays 64-bit xxhash64.""",
+    doc="""SimHash near-dup pairs, 4-chunk blocked, hamming<=12. The
+    60-bit md5 fingerprints every caller gets, the blocking and the
+    hamming distances are value-level oracled.""",
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.simhash_near_pairs(
-        load_table(spark, sf_dir, "documents"), hash_mode="md5"
-    )
+    return dedup.simhash_near_pairs(load_table(spark, sf_dir, "documents"))
 
 
 @register(
@@ -336,9 +335,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_clusters_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return dedup.near_dup_clusters_lsh(
-        docs, threshold=0.8, hash_mode="md5"
-    )
+    return dedup.near_dup_clusters_lsh(docs, threshold=0.8)
 
 
 @register(
@@ -578,16 +575,15 @@ def embedding_near_dup_lsh_hof(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="""DSIR training-data selection (Xie et al., arXiv:2302.03169):
     hashed unigram+bigram importance weights log p_target - log q_raw
     (target = the English slice, raw = the whole pool), top-20 by
-    weight. Gate runs the md5-parity bucket hash so featurization,
-    smoothing, and the weighted sum are value-level oracled end to
-    end; production default stays xxhash64 (same plan shape). The
-    bucket ratio table is a broadcast constant, so scoring scales as
+    weight. Features hash to the 60-bit md5 prefix, the operator's only
+    bucket hash, so featurization, smoothing, and the weighted sum are
+    value-level oracled end to end. The bucket ratio table is a broadcast constant, so scoring scales as
     one scan + one groupBy per corpus.""",
 )
 def dsir_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return selection.dsir_topk(
-        docs, docs.filter(F.col("lang") == "en"), k=20, hash_mode="md5"
+        docs, docs.filter(F.col("lang") == "en"), k=20
     )
 
 
@@ -902,7 +898,8 @@ def per_source_cap_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus is split at the median doc_id into an already-deduped
     'existing' half and a 'new' batch; only the new bands probe the band
     index (existing x existing pairs are never generated) and exact
-    verification touches candidate members only. Values = the full-corpus
+    verification touches candidate members only — the same operator the
+    dedup ingest and streaming loops run. Values = the full-corpus
     LSH pairs restricted to pairs with a new member.""",
 )
 def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -912,7 +909,6 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.filter(F.col("doc_id") < k),
         docs.filter(F.col("doc_id") >= k),
         threshold=0.8,
-        hash_mode="md5",
     )
 
 

@@ -530,7 +530,6 @@ def run_streaming_dedup_ingest(
     threshold: float = 0.8,
     num_perm: int = 32,
     bands: int = 8,
-    hash_mode: str = "xxhash64",
     num_buckets: int = 64,
     file_format: str = "parquet",
     schema=None,
@@ -572,7 +571,6 @@ def run_streaming_dedup_ingest(
             threshold=threshold,
             num_perm=num_perm,
             bands=bands,
-            hash_mode=hash_mode,
             num_buckets=num_buckets,
             load_id=lid,
             rounds_table=rtable or None,

@@ -139,8 +139,8 @@ def test_dedup_ingest_batch_loop_matches_full_corpus(spark, tmp_path):
 
 def test_dsir_weights_favor_target_like_docs(spark):
     """DSIR direction sanity on a constructed pool: docs sharing the
-    target's vocabulary outrank docs that don't, under both hash
-    backends, and weights are deterministic."""
+    target's vocabulary outrank docs that don't, and weights are
+    deterministic."""
     from gcp_datalake_pipeline_spark.operators import selection
 
     target = spark.createDataFrame(
@@ -156,19 +156,18 @@ def test_dsir_weights_favor_target_like_docs(spark):
         ],
         "doc_id long, text string",
     )
-    for mode in ("xxhash64", "md5"):
-        top = selection.dsir_topk(raw, target, k=4, hash_mode=mode)
-        ranked = [r["doc_id"] for r in top.collect()]
-        assert set(ranked[:2]) == {1, 2}, (mode, ranked)
-        again = [r["doc_id"] for r in selection.dsir_topk(
-            raw, target, k=4, hash_mode=mode
-        ).collect()]
-        assert again == ranked
+    top = selection.dsir_topk(raw, target, k=4)
+    ranked = [r["doc_id"] for r in top.collect()]
+    assert set(ranked[:2]) == {1, 2}, ranked
+    again = [
+        r["doc_id"] for r in selection.dsir_topk(raw, target, k=4).collect()
+    ]
+    assert again == ranked
 
 
 def test_dsir_md5_matches_duckdb_oracle(spark):
-    """The registry gate's comparison in-tree at sf0.001: md5-parity
-    Spark DSIR == the nibble-rebuilt DuckDB oracle, value for value."""
+    """The registry gate's comparison in-tree at sf0.001: Spark DSIR
+    == the nibble-rebuilt DuckDB oracle, value for value."""
     import duckdb
 
     from gcp_datalake_pipeline_spark.operators import selection
@@ -180,7 +179,7 @@ def test_dsir_md5_matches_duckdb_oracle(spark):
     got = [
         (r["doc_id"], r["weight"])
         for r in selection.dsir_topk(
-            docs, docs.filter(F.col("lang") == "en"), k=15, hash_mode="md5"
+            docs, docs.filter(F.col("lang") == "en"), k=15
         ).collect()
     ]
     con = duckdb.connect()
@@ -208,9 +207,7 @@ def test_dsir_weight_is_exact_micro_units(spark):
 
     sf = "/root/testdata/sf0.001"
     docs = load_table(spark, sf, "documents")
-    w = selection.dsir_weights(
-        docs, docs.filter(F.col("lang") == "en"), hash_mode="md5"
-    )
+    w = selection.dsir_weights(docs, docs.filter(F.col("lang") == "en"))
     # ulp-scaled bound: the round-trip (S/1e6)*1e6 the test performs
     # carries up to ~2*|S|*2^-52 float error, so a fixed 1e-6 would
     # false-fail once micro-sums reach ~1e10 at larger corpora
@@ -448,8 +445,7 @@ def test_perplexity_bands_match_sql_ntile(spark):
 
 def test_nb_classifier_separable_classes(spark):
     """On vocabulary-separable classes NB is exact: every held-out doc of
-    each dialect classifies to its own class, under both hash backends,
-    deterministically."""
+    each dialect classifies to its own class, deterministically."""
     from gcp_datalake_pipeline_spark.operators import classify
 
     train = spark.createDataFrame(
@@ -461,12 +457,11 @@ def test_nb_classifier_separable_classes(spark):
         [(100, "beta gamma alpha"), (101, "psi phi omega chi psi")],
         "doc_id long, text string",
     )
-    for mode in ("xxhash64", "md5"):
-        out = {
-            r["doc_id"]: r["pred"]
-            for r in classify.nb_classify(test, train, hash_mode=mode).collect()
-        }
-        assert out == {100: "A", 101: "B"}, (mode, out)
+    out = {
+        r["doc_id"]: r["pred"]
+        for r in classify.nb_classify(test, train).collect()
+    }
+    assert out == {100: "A", 101: "B"}, out
 
 
 def test_nb_prior_decides_empty_evidence_ties(spark):
@@ -505,9 +500,7 @@ def test_nb_score_is_exact_micro_units(spark):
     assert len(out) == 1 and out[0]["pred"] == "A"
     # model: features of 'a b' = {a, b, 'a b'} -> 3 counts, tot=3
     # doc buckets equal train buckets -> each term cnt=1, ccnt=1
-    feats = doc_bucket_counts(
-        test, 16, "xxhash64", "text", "doc_id"
-    ).collect()
+    feats = doc_bucket_counts(test, 16, "text", "doc_id").collect()
     term = round(math.log((1 + 1.0) / (3 + 1.0 * 16)) * 1e6)
     expect = (
         round(math.log(1.0) * 1e6) + sum(r["cnt"] * term for r in feats)

@@ -142,21 +142,6 @@ def test_embedding_near_dup_lsh_subset_and_recall(spark):
         assert recall >= 0.2, f"embedding LSH near-dup recall {recall}"
 
 
-def test_md5_parity_modes_consistent_with_production(spark, docs):
-    """The md5-parity hash modes (gate/oracle) must agree with the xxhash64
-    production modes on the verified OUTPUT pairs they both confirm — the
-    hash only changes candidate generation, never verification truth."""
-    x = {(r["doc_a"], r["doc_b"]) for r in
-         dedup.minhash_lsh_pairs(docs, threshold=0.8).collect()}
-    m = {(r["doc_a"], r["doc_b"]) for r in
-         dedup.minhash_lsh_pairs(docs, threshold=0.8, hash_mode="md5").collect()}
-    exact = {(r["doc_a"], r["doc_b"]) for r in
-             dedup.jaccard_pairs(docs, threshold=0.8).collect()}
-    assert x <= exact and m <= exact
-    if exact:
-        assert len(m) / len(exact) >= 0.8
-
-
 def test_chunk_boilerplate_strip(spark):
     """Chunks shared across docs are flagged and stripped; unique chunks
     survive in order."""
@@ -1108,60 +1093,70 @@ def test_embedding_near_dup_lsh_candidate_cap_refuses(spark):
     )
 
 
-def test_arrow_backends_match_jvm_md5(spark, docs):
-    """r13 optimization pin: the Arrow/numpy kernels for the md5-parity
-    modes (simhash fingerprints, minhash signatures, minhash band index)
-    must produce IDENTICAL values to the JVM codegen shapes they
-    replaced as the default — tokenization (re.ASCII \\s+ == Java \\s+),
-    md5 arithmetic, permutation math, and band hashing are all exact
-    integer paths, so equality is bitwise, not approximate."""
-    jvm_sh = {
-        r["doc_id"]: r["simhash"]
-        for r in dedup.simhash(docs, hash_mode="md5", backend="jvm").collect()
-    }
-    arrow_sh = {
-        r["doc_id"]: r["simhash"]
-        for r in dedup.simhash(docs, hash_mode="md5").collect()
-    }
-    assert arrow_sh == jvm_sh and arrow_sh
+def test_kernel_values_match_duckdb(spark, docs):
+    """Per-document values of the Arrow/numpy kernels equal the DuckDB
+    CTEs the registry oracles are built from: ``sigel`` for the MinHash
+    signatures, ``bandhash`` for the band index and ``fp`` for the
+    SimHash fingerprints. The reference is independent of Spark, and
+    tokenization (re.ASCII \\s+ == \\s+), md5 arithmetic, permutation
+    math and band hashing are exact integer paths, so equality is
+    bitwise."""
+    from gcp_datalake_pipeline_spark.plans.compare import duckdb_connection
 
-    jvm_sig = {
-        r["doc_id"]: list(r["sig"])
-        for r in dedup.minhash_signatures(
-            docs, hash_mode="md5", backend="jvm"
-        ).collect()
-    }
-    arrow_sig = {
-        r["doc_id"]: list(r["sig"])
-        for r in dedup.minhash_signatures(docs, hash_mode="md5").collect()
-    }
-    assert arrow_sig == jvm_sig and arrow_sig
+    ctes = (
+        f"WITH {dedup._SHINGLE_CTE}, {dedup._HASH60_CTE},"
+        f"{dedup._lsh_candidate_ctes(32, 8)},{dedup._SIMHASH_CTE}"
+    )
+    con = duckdb_connection(SF_DIR)
+    try:
+        ref_sig = {
+            int(d): [int(x) for x in sig]
+            for d, sig in con.execute(
+                f"{ctes} SELECT doc_id, list(mh ORDER BY seed) "
+                "FROM sigel GROUP BY doc_id"
+            ).fetchall()
+        }
+        ref_band = {
+            (int(d), int(b), h)
+            for d, b, h in con.execute(
+                f"{ctes} SELECT doc_id, band_id, band_hash FROM bandhash"
+            ).fetchall()
+        }
+        ref_fp = {
+            int(d): int(v)
+            for d, v in con.execute(
+                f"{ctes} SELECT doc_id, simhash FROM fp"
+            ).fetchall()
+        }
+    finally:
+        con.close()
 
-    jvm_b = {
-        (r["doc_id"], int(r["band_id"]), r["band_hash"])
-        for r in dedup.minhash_bands(
-            docs, hash_mode="md5", backend="jvm"
-        ).collect()
+    sig = {
+        r["doc_id"]: list(r["sig"])
+        for r in dedup.minhash_signatures(docs).collect()
     }
-    arrow_b = {
+    assert sig == ref_sig and sig
+    band = {
         (r["doc_id"], int(r["band_id"]), r["band_hash"])
-        for r in dedup.minhash_bands(docs, hash_mode="md5").collect()
+        for r in dedup.minhash_bands(docs).collect()
     }
-    assert arrow_b == jvm_b and arrow_b
+    assert band == ref_band and len(band) == 8 * len(sig)
+    fp = {r["doc_id"]: r["simhash"] for r in dedup.simhash(docs).collect()}
+    assert fp == ref_fp and fp
 
 
 def test_arrow_backends_drop_shingleless_docs(spark):
     """Documents with no shingles (under 3 tokens, empty, or NULL text)
-    must yield NO fingerprint/signature row — the explode+groupBy
-    contract of the JVM shape."""
+    must yield NO fingerprint/signature row, like the oracles' shingle
+    CTE, which has no row for them."""
     d = spark.createDataFrame(
         [(1, "one two"), (2, ""), (3, None), (4, "a b c d")],
         "doc_id long, text string",
     )
-    assert [r["doc_id"] for r in dedup.simhash(d, hash_mode="md5").collect()] == [4]
+    assert [r["doc_id"] for r in dedup.simhash(d).collect()] == [4]
     assert [
         r["doc_id"]
-        for r in dedup.minhash_signatures(d, hash_mode="md5").collect()
+        for r in dedup.minhash_signatures(d).collect()
     ] == [4]
 
 

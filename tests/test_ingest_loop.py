@@ -262,6 +262,53 @@ def test_docs_without_bands_index_recomputes(spark, tmp_path):
     assert {(r.doc_a, r.doc_b, r.jaccard) for r in pairs} == expect
 
 
+def test_stale_integer_band_index_refused_then_rebuilt(spark, dedup_lake):
+    """A band index holding 64-bit integer band hashes (written by an
+    older engine) would be silently widened to strings by the probe
+    union and never match the md5 hex band hashes, losing every
+    candidate against the older corpus. The round refuses it before
+    committing anything; after the table is dropped, the next round
+    rebuilds the index from the stored docs and persists it whole."""
+    from gcp_datalake_pipeline_spark.operators.dedup import (
+        minhash_bands,
+        minhash_lsh_pairs,
+    )
+
+    docs = spark.read.parquet(DOCS)
+    b1, b2, _ = _batches(docs, "doc_id")
+    cat = dedup_lake(1)  # round b1
+    cat.drop_table("corpus_minhash_bands")
+    cat.append(
+        spark.createDataFrame(
+            [(0, 0, 123)], "doc_id long, band_id int, band_hash bigint"
+        ),
+        "corpus_minhash_bands",
+    )
+    n_versions = len(cat.versions())
+    with pytest.raises(ValueError, match="corpus_minhash_bands"):
+        corpus.dedup_ingest_batch(cat, b2)
+    assert len(cat.versions()) == n_versions  # nothing committed
+
+    cat.drop_table("corpus_minhash_bands")
+    pairs = corpus.dedup_ingest_batch(cat, b2).collect()
+    both = b1.unionByName(b2)
+    lo = b2.agg(F.min("doc_id")).first()[0]
+    expect = {
+        (r.doc_a, r.doc_b, r.jaccard)
+        for r in minhash_lsh_pairs(both).collect()
+        if r.doc_b >= lo
+    }
+    assert {(r.doc_a, r.doc_b, r.jaccard) for r in pairs} == expect
+    stored = {
+        (r.doc_id, r.band_id, r.band_hash)
+        for r in cat.read("corpus_minhash_bands").collect()
+    }
+    assert stored == {
+        (r.doc_id, r.band_id, r.band_hash)
+        for r in minhash_bands(both).collect()
+    }
+
+
 def test_embedding_ingest_loop_matches_full_corpus(spark, tmp_path):
     """Three embedding ingest rounds: every near-dup pair flagged exactly
     once, union equals the full-corpus LSH pairs, vectors stored
